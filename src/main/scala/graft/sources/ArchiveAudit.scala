@@ -42,13 +42,12 @@ object ArchiveAudit {
     * matches are ignored — tars have no central directory to audit).
     */
   def zipFsck(spark: SparkSession, pattern: String,
-      maxPayload: Long = TextArchiveDataSource.defaultMaxPayload): DataFrame = {
+      maxPayload: Long = FileRecordSource.defaultMaxPayload): DataFrame = {
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val files = ElbDataSource.expand(Seq(pattern), conf.value)
+    val files = FileRecordSource.expand(Seq(pattern), conf.value)
       .filter(_.toLowerCase.endsWith(".zip"))
-    // same int-range clamp as TextArchiveTable: the walker materializes
-    // payloads as byte arrays, so the cap must stay below Int.MaxValue
-    val cappedPayload = maxPayload.min(Int.MaxValue.toLong - 8)
+    // the walker materializes payloads as byte arrays: the sources' clamp
+    val cappedPayload = FileRecordSource.clampPayload(maxPayload)
     import spark.implicits._
     val parts = math.max(1, math.min(files.size, 64))
     spark.createDataset(files).repartition(parts) // bounded: the file listing
@@ -67,7 +66,7 @@ object ArchiveAudit {
       val len = fs.getFileStatus(hp).getLen
 
       // ——— central-directory side: the shared tail-only parse (also
-      //     drives splittable zip reading in TextArchiveScan); cdSize is
+      //     drives splittable zip reading in TextArchiveDataSource.planBatch); cdSize is
       //     capped there because an untrusted u32 in (cap, 0xFFFFFFFE]
       //     would pass the zip64 check and the EOF guard, then overflow
       //     the allocation — a named error keeps the "never an

@@ -1,21 +1,16 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader, ObjectInputStream, ObjectOutputStream}
+import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In, IsNotNull, StringContains, StringStartsWith}
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,14 +21,16 @@ import graft.elb.ElbSchema
   * .load(glob)` scans `.gz` (or plain) log files and emits the 29
   * positional raw fields plus `log_source_file` — the same frame as
   * `ElbParser.readRaw → tokenize` (ElbSourceSpec pins byte equality,
-  * edge lines included), but as a first-class source:
+  * edge lines included), but as a first-class source on the shared
+  * [[FileRecordSource]] scaffold:
   *
-  *  - **Column pruning reaches the reader**: `SupportsPushDownRequiredColumns`
-  *    hands the pruned schema to each partition reader, which
-  *    materializes ONLY the requested fields from each line (the
-  *    tokenizer still scans the line once — it must find separators —
-  *    but per-field string allocation and row width drop to the
-  *    projection, and `ReadSchema` in the plan shows the truth).
+  *  - **Column pruning reaches the reader**, which materializes ONLY
+  *    the requested fields from each line (the tokenizer still scans
+  *    the line once — it must find separators — but per-field string
+  *    allocation and row width drop to the projection, and `ReadSchema`
+  *    in the plan shows the truth).
+  *  - **Pushed predicates** on the 29 raw columns read the token array
+  *    by index and drop lines before any row materializes.
   *  - **One partition per file**, the correct split for gzip members
   *    (reference behavior: whole-file streaming; the splittable path
   *    at scale is the q55 zstd landing zone, `elb/Ingest.scala`).
@@ -47,181 +44,34 @@ import graft.elb.ElbSchema
   * the field to RAW text (quotes kept) up to the next separator; a
   * trailing separator at end-of-line emits nothing.
   */
-class ElbDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "elb"
-  override def supportsExternalMetadata(): Boolean = false
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ElbDataSource.fullSchema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new ElbTable(ElbDataSource.resolvePaths(properties))
+class ElbDataSource extends FileRecordSource {
+  protected def format: FileRecordFormat[_, _] = ElbDataSource
 }
 
-object ElbDataSource {
+object ElbDataSource extends FileRecordFormat[Array[String], Unit] {
   val fileColumn = "log_source_file"
+  val shortName = "elb"
   val fullSchema: StructType =
     StructType(ElbSchema.raw.fields :+ StructField(fileColumn, StringType, nullable = false))
+  val pushable: Set[String] = ElbSchema.rawColumns.toSet
+  def parseOptions(options: CaseInsensitiveStringMap): Unit = ()
 
-  /** Paths from DSv2 options: `.load(p)` → "path"; `.load(ps: _*)` →
-    * "paths" as a JSON string array (simple values — parsed with the
-    * JSON string-literal rules, no nesting exists here).
-    */
-  private[sources] def resolvePaths(props: java.util.Map[String, String]): Seq[String] = {
-    val multi = Option(props.get("paths")).toSeq.flatMap { js =>
-      val s = js.trim.stripPrefix("[").stripSuffix("]")
-      // JSON string literals, comma-separated; our paths contain no
-      // escapes beyond what URI-safe file paths allow
-      s.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-    }
-    val single = Option(props.get("path")).toSeq
-    val all = multi ++ single
-    require(all.nonEmpty, "elb source requires a path")
-    all
+  /** Pushed predicates read the token array by raw-column index. */
+  def column(name: String): Array[String] => String = {
+    val idx = ElbSchema.rawColumns.indexOf(name)
+    toks => toks(idx)
   }
 
-  /** Driver-side glob expansion, mirroring Spark's file-index rules
-    * (skip hidden `_`/`.` files).
-    */
-  private[sources] def expand(paths: Seq[String], conf: Configuration): Seq[String] = {
-    paths.flatMap { p =>
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(conf)
-      val matches: Seq[FileStatus] =
-        Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
-      matches.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-        else Seq(st)
-      }
-    }.filter { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }.map { st =>
-      // render like `input_file_name()` does (empty authority kept:
-      // file:///x, not Path.toUri's file:/x) so the file column is
-      // byte-identical to the text-source path
-      val u = st.getPath.toUri
-      new java.net.URI(u.getScheme, Option(u.getAuthority).getOrElse(""),
-        u.getPath, null, null).toString
-    }.sorted
-  }
-}
-
-/** Minimal serializable Hadoop-conf carrier (the stock spark one is
-  * `private[spark]`): Configuration itself knows how to write/read its
-  * fields.
-  */
-class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
-  private def writeObject(out: ObjectOutputStream): Unit = {
-    out.defaultWriteObject(); value.write(out)
-  }
-  private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject(); value = new Configuration(false); value.readFields(in)
-  }
-}
-
-class ElbTable(paths: Seq[String]) extends Table with SupportsRead {
-  override def name(): String = s"elb(${paths.mkString(",")})"
-  override def schema(): StructType = ElbDataSource.fullSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    new ElbScanBuilder(paths, new SerializableHadoopConf(conf))
-  }
-}
-
-class ElbScanBuilder(paths: Seq[String], conf: SerializableHadoopConf)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = ElbDataSource.fullSchema
-  private var pushed: Array[Filter] = Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  /** Accept the string-comparison shapes the reader can evaluate on the
-    * token array BEFORE materializing a row (null-safe: a null token
-    * fails every accepted predicate, exactly like the SQL semantics).
-    * Everything accepted is ALSO returned as a post-scan filter —
-    * standard V2 contract for sources that cannot guarantee exhaustive
-    * application (Spark re-checks; the win is rows dropped pre-alloc).
-    */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, rest) = filters.partition {
-      case EqualTo(a, _: String) => ElbSchema.rawColumns.contains(a)
-      case In(a, vs) if vs.forall(_.isInstanceOf[String]) =>
-        ElbSchema.rawColumns.contains(a)
-      case IsNotNull(a) => ElbSchema.rawColumns.contains(a)
-      case StringStartsWith(a, _) => ElbSchema.rawColumns.contains(a)
-      case StringContains(a, _) => ElbSchema.rawColumns.contains(a)
-      case _ => false
-    }
-    pushed = ok
-    rest ++ ok
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def build(): Scan = new ElbScan(paths, required, pushed, conf)
-}
-
-case class ElbFilePartition(path: String) extends InputPartition
-
-class ElbScan(paths: Seq[String], required: StructType, pushed: Array[Filter],
-    conf: SerializableHadoopConf) extends Scan with Batch {
-  private lazy val files = ElbDataSource.expand(paths, conf.value)
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"elb scan: ${files.size} files, ${required.fieldNames.mkString(",")}" +
-      (if (pushed.isEmpty) "" else s", PushedFilters: ${pushed.mkString(", ")}")
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map(ElbFilePartition(_): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ElbReaderFactory(required.fieldNames, pushed, conf)
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new ElbMicroBatchStream(paths, required, pushed, conf)
-}
-
-/** File-count offsets over the SORTED listing: batch N..M reads files
-  * N until M of the lexicographic order. Exactly-once holds for
-  * append-only directories whose new files sort after processed ones —
-  * true for ALB's timestamped log object names, and the reason this
-  * stays a dozen lines where the general text file source carries a
-  * seen-files map. (A violated assumption shows up loudly: the drain
-  * re-reads or skips whole files, which ElbSourceSpec's incremental
-  * test would catch.)
-  */
-case class ElbFileOffset(n: Int) extends Offset {
-  override def json(): String = n.toString
-}
-
-class ElbMicroBatchStream(paths: Seq[String], required: StructType,
-    pushed: Array[Filter], conf: SerializableHadoopConf) extends MicroBatchStream {
-  private def listing(): Seq[String] = ElbDataSource.expand(paths, conf.value)
-  override def initialOffset(): Offset = ElbFileOffset(0)
-  override def latestOffset(): Offset = ElbFileOffset(listing().size)
-  override def deserializeOffset(json: String): Offset =
-    ElbFileOffset(json.trim.toInt)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[ElbFileOffset].n
-    val e = end.asInstanceOf[ElbFileOffset].n
-    listing().slice(s, e).map(ElbFilePartition(_): InputPartition).toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ElbReaderFactory(required.fieldNames, pushed, conf)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-class ElbReaderFactory(fieldNames: Array[String], pushed: Array[Filter],
-    conf: SerializableHadoopConf) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ElbPartitionReader(partition.asInstanceOf[ElbFilePartition].path,
-      fieldNames, pushed, conf)
+  def open(path: String, fieldNames: Array[String], passes: Array[String] => Boolean,
+      options: Unit, conf: Configuration): PartitionReader[InternalRow] =
+    new ElbPartitionReader(path, fieldNames, passes, conf)
 }
 
 /** Streams one log file; emits only the required fields, dropping rows
   * that fail a pushed filter before any row materializes.
   */
 class ElbPartitionReader(pathStr: String, fieldNames: Array[String],
-    pushed: Array[Filter], conf: SerializableHadoopConf)
+    passes: Array[String] => Boolean, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   // required-field → raw-column index; -1 = the file-path column
@@ -229,36 +79,9 @@ class ElbPartitionReader(pathStr: String, fieldNames: Array[String],
     fieldNames.map(n => ElbSchema.rawColumns.indexOf(n))
   private val pathUtf8 = UTF8String.fromString(pathStr)
 
-  // pushed filters compiled to (raw index, predicate on the token)
-  private val preds: Array[(Int, String => Boolean)] = pushed.map {
-    case EqualTo(a, v: String) => ElbSchema.rawColumns.indexOf(a) ->
-      ((t: String) => t == v)
-    case In(a, vs) =>
-      val set = vs.map(_.asInstanceOf[String]).toSet
-      ElbSchema.rawColumns.indexOf(a) -> ((t: String) => set.contains(t))
-    case IsNotNull(a) => ElbSchema.rawColumns.indexOf(a) ->
-      ((_: String) => true) // non-null check is the null guard below
-    case StringStartsWith(a, p) => ElbSchema.rawColumns.indexOf(a) ->
-      ((t: String) => t.startsWith(p))
-    case StringContains(a, s) => ElbSchema.rawColumns.indexOf(a) ->
-      ((t: String) => t.contains(s))
-    case f => throw new IllegalStateException(s"unpushable filter $f")
-  }
-
-  private def passes(toks: Array[String]): Boolean = {
-    var i = 0
-    while (i < preds.length) {
-      val (idx, p) = preds(i)
-      val t = toks(idx)
-      if (t == null || !p(t)) return false
-      i += 1
-    }
-    true
-  }
-
   private lazy val reader: BufferedReader = {
     val hp = new Path(pathStr)
-    val fs = hp.getFileSystem(conf.value)
+    val fs = hp.getFileSystem(conf)
     val raw = fs.open(hp)
     val in = if (pathStr.endsWith(".gz")) new GZIPInputStream(raw) else raw
     new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))

@@ -5,15 +5,10 @@ import java.nio.ByteBuffer
 import java.nio.charset.{CharacterCodingException, CodingErrorAction, StandardCharsets}
 import java.util.zip.{GZIPInputStream, ZipException, ZipInputStream}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.sources.{EqualTo, Filter, In, IsNotNull, StringContains, StringStartsWith}
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -51,13 +46,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * structural one, which keeps `ok` independent of which columns a
   * query projects.
   *
-  * Scale shape, same rules as the ELB/WARC sources:
+  * Scale shape, from the shared [[FileRecordSource]] scaffold plus the
+  * one planner override:
   *  - **tars: one partition per archive** (a tar stream has no
   *    directory and cannot split mid-stream; corpus dumps ship as many
   *    archives, so file count is the parallelism there),
   *  - **zips: SPLITTABLE via the central directory** (round 15) — batch
   *    scans plan member-range partitions from the directory's
-  *    local-header offsets ([[TextArchiveScan.planInputPartitions]]),
+  *    local-header offsets ([[TextArchiveDataSource.planBatch]]),
   *    so one large zip parallelizes across executors and pushed member
   *    predicates prune at PLAN time; `zipcd=false` restores the forward
   *    walk, which also remains the fallback for directories the parse
@@ -68,24 +64,25 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - **member-predicate pushdown** (`member_path`, `ext` equality /
   *    prefix / contains / in) skips payloads of non-matching members:
   *    `ext = 'txt'` never reads the `.json` sidecars' bytes,
-  *  - a `maxPayload` option (default 64 MiB) quarantines rather than
-  *    buffers members whose declared size a scan should not trust.
+  *  - a `maxPayload` option (default 64 MiB, clamped below 2 GiB)
+  *    quarantines rather than buffers members whose declared size a
+  *    scan should not trust.
   */
-class TextArchiveDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "textarchive"
-  override def supportsExternalMetadata(): Boolean = false
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TextArchiveDataSource.fullSchema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new TextArchiveTable(ElbDataSource.resolvePaths(properties),
-      Option(properties.get("maxpayload")).map(_.toLong)
-        .getOrElse(TextArchiveDataSource.defaultMaxPayload))
+class TextArchiveDataSource extends FileRecordSource {
+  protected def format: FileRecordFormat[_, _] = TextArchiveDataSource
 }
 
-object TextArchiveDataSource {
+/** Parsed read options: `maxpayload` (clamped), `zipcd` (default true;
+  * `false` forces the forward stream walk for zips — the pre-round-15
+  * behavior, kept for parity pinning and for archives whose directories
+  * are known-hostile) and `zipsplitbytes` (compressed bytes per
+  * CD-planned partition).
+  */
+case class TextArchiveOptions(maxPayload: Long, zipCd: Boolean, zipSplitBytes: Long)
+
+object TextArchiveDataSource extends FileRecordFormat[ArchiveMember, TextArchiveOptions] {
   val fileColumn = "archive_source_file"
-  val defaultMaxPayload: Long = 64L * 1024 * 1024
+  val shortName = "textarchive"
   /** Compressed payload bytes per CD-planned zip partition — the
     * `maxPartitionBytes` analog for the container leg.
     */
@@ -102,108 +99,31 @@ object TextArchiveDataSource {
     StructField(fileColumn, StringType, nullable = false)))
 
   /** Member-metadata columns a predicate may be pushed on. */
-  val filterable: Set[String] = Set("member_path", "ext")
+  val pushable: Set[String] = Set("member_path", "ext")
 
-  private def field(m: ArchiveMember, name: String): String = name match {
-    case "member_path" => m.memberPath
-    case "ext" => m.ext
-    case _ => null
+  def parseOptions(options: CaseInsensitiveStringMap): TextArchiveOptions =
+    TextArchiveOptions(FileRecordSource.maxPayload(options),
+      Option(options.get("zipcd")).forall(_.toBoolean),
+      Option(options.get("zipsplitbytes")).map(_.toLong)
+        .getOrElse(defaultZipSplitBytes).max(1L))
+
+  def column(name: String): ArchiveMember => String = name match {
+    case "member_path" => _.memberPath
+    case "ext" => _.ext
   }
 
-  /** Compile pushed member predicates to a conjunction over
-    * [[ArchiveMember]] — used by the partition readers (payload-skip
-    * decision) AND by [[TextArchiveScan]]'s central-directory planning
-    * (a zip member failing the pushed predicate never gets a partition
-    * slot, so its local header is never even seeked to).
-    */
-  private[sources] def compilePredicates(
-      pushed: Array[Filter]): ArchiveMember => Boolean = {
-    val preds: Array[ArchiveMember => Boolean] = pushed.map {
-      case EqualTo(a, v: String) => (m: ArchiveMember) => field(m, a) == v
-      case In(a, vs) =>
-        val set = vs.map(_.asInstanceOf[String]).toSet
-        (m: ArchiveMember) => { val f = field(m, a); f != null && set.contains(f) }
-      case IsNotNull(a) => (m: ArchiveMember) => field(m, a) != null
-      case StringStartsWith(a, p) => (m: ArchiveMember) =>
-        { val f = field(m, a); f != null && f.startsWith(p) }
-      case StringContains(a, s) => (m: ArchiveMember) =>
-        { val f = field(m, a); f != null && f.contains(s) }
-      case f => throw new IllegalStateException(s"unpushable filter $f")
-    }
-    m => preds.forall(_(m))
-  }
+  def open(path: String, fieldNames: Array[String], passes: ArchiveMember => Boolean,
+      options: TextArchiveOptions, conf: Configuration): PartitionReader[InternalRow] =
+    new TextArchivePartitionReader(path, fieldNames, passes, options.maxPayload, conf)
 
-  /** Lowercased extension of the member BASENAME (null when none). */
-  def extOf(path: String): String = {
-    if (path == null) return null
-    val base = path.substring(path.lastIndexOf('/') + 1)
-    val dot = base.lastIndexOf('.')
-    if (dot <= 0 || dot == base.length - 1) null
-    else base.substring(dot + 1).toLowerCase
+  override def reader(partition: InputPartition, fieldNames: Array[String],
+      passes: ArchiveMember => Boolean, options: TextArchiveOptions,
+      conf: Configuration): PartitionReader[InternalRow] = partition match {
+    case ZipMemberRangePartition(path, offsets) =>
+      new ZipMembersPartitionReader(path, offsets, fieldNames, passes,
+        options.maxPayload, conf)
+    case p => super.reader(p, fieldNames, passes, options, conf)
   }
-}
-
-class TextArchiveTable(paths: Seq[String], maxPayload: Long)
-    extends Table with SupportsRead {
-  override def name(): String = s"textarchive(${paths.mkString(",")})"
-  override def schema(): StructType = TextArchiveDataSource.fullSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    // clamp: payloads materialize as JVM byte arrays, so a cap above
-    // Int.MaxValue would let `size.toInt` wrap negative in the tar walker
-    // and `maxPayload + 1` overflow in the zip walker — both uncaught.
-    // Anything ≥ ~2 GiB per member is beyond this source's design anyway.
-    val mp = Option(options.get("maxpayload")).map(_.toLong).getOrElse(maxPayload)
-      .min(Int.MaxValue.toLong - 8)
-    // `zipcd=false` forces the forward stream walk for zips (the
-    // pre-round-15 behavior — kept for parity pinning and for archives
-    // whose directories are known-hostile); `zipsplitbytes` targets the
-    // compressed bytes per CD-planned partition
-    val zipCd = Option(options.get("zipcd")).forall(_.toBoolean)
-    val zipSplitBytes = Option(options.get("zipsplitbytes")).map(_.toLong)
-      .getOrElse(TextArchiveDataSource.defaultZipSplitBytes).max(1L)
-    new TextArchiveScanBuilder(paths, mp, zipCd, zipSplitBytes,
-      new SerializableHadoopConf(conf))
-  }
-}
-
-class TextArchiveScanBuilder(paths: Seq[String], maxPayload: Long,
-    zipCd: Boolean, zipSplitBytes: Long, conf: SerializableHadoopConf)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = TextArchiveDataSource.fullSchema
-  private var pushed: Array[Filter] = Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val ok = TextArchiveDataSource.filterable
-    val (acc, rest) = filters.partition {
-      case EqualTo(a, _: String) => ok.contains(a)
-      case In(a, vs) if vs.forall(_.isInstanceOf[String]) => ok.contains(a)
-      case IsNotNull(a) => ok.contains(a)
-      case StringStartsWith(a, _) => ok.contains(a)
-      case StringContains(a, _) => ok.contains(a)
-      case _ => false
-    }
-    pushed = acc
-    rest ++ acc
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def build(): Scan =
-    new TextArchiveScan(paths, required, pushed, maxPayload, zipCd,
-      zipSplitBytes, conf)
-}
-
-class TextArchiveScan(paths: Seq[String], required: StructType,
-    pushed: Array[Filter], maxPayload: Long, zipCd: Boolean,
-    zipSplitBytes: Long, conf: SerializableHadoopConf) extends Scan with Batch {
-  private lazy val files = ElbDataSource.expand(paths, conf.value)
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"textarchive scan: ${files.size} files, ${required.fieldNames.mkString(",")}" +
-      (if (pushed.isEmpty) "" else s", PushedFilters: ${pushed.mkString(", ")}")
 
   /** Batch planning (round 15): `.zip` files plan from their CENTRAL
     * DIRECTORY — one tail read per zip (the [[ZipCentralDirectory]]
@@ -222,14 +142,15 @@ class TextArchiveScan(paths: Seq[String], required: StructType,
     * Tars and the fallback keep one partition per archive. The CD
     * parses fan out on a bounded driver-side thread pool — the parquet-
     * footer-listing analogy, thousands of files stay sub-second.
+    * Micro-batch streams keep the shared one-partition-per-file plan.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val passes = TextArchiveDataSource.compilePredicates(pushed)
+  override def planBatch(files: Seq[String], passes: ArchiveMember => Boolean,
+      options: TextArchiveOptions, conf: Configuration): Array[InputPartition] = {
     def planFile(f: String): Seq[InputPartition] =
-      if (!zipCd || !f.toLowerCase.endsWith(".zip")) Seq(ElbFilePartition(f))
+      if (!options.zipCd || !f.toLowerCase.endsWith(".zip")) Seq(FileRecordPartition(f))
       else {
         val hp = new org.apache.hadoop.fs.Path(f)
-        val fs = hp.getFileSystem(conf.value)
+        val fs = hp.getFileSystem(conf)
         // streaming visitor (a 20M-member directory never materializes):
         // kept members group incrementally in directory order — which is
         // ascending local-header offset for every common writer; each
@@ -245,9 +166,8 @@ class TextArchiveScan(paths: Seq[String], required: StructType,
         val parsed =
           try ZipCentralDirectory.visit(fs, hp, fs.getFileStatus(hp).getLen) { e =>
             if (!e.isDirectory && passes(ArchiveMember(e.name,
-                TextArchiveDataSource.extOf(e.name), null, null, null,
-                ok = true, null))) {
-              if (cur.nonEmpty && bytes + e.compressedSize > zipSplitBytes) flush()
+                extOf(e.name), null, null, null, ok = true, null))) {
+              if (cur.nonEmpty && bytes + e.compressedSize > options.zipSplitBytes) flush()
               cur += e.locOffset
               bytes += e.compressedSize + 64 // + per-member header overhead
             }
@@ -255,7 +175,7 @@ class TextArchiveScan(paths: Seq[String], required: StructType,
           catch { case scala.util.control.NonFatal(e) =>
             Left(s"central directory unreadable: ${e.getMessage}") }
         parsed match {
-          case Left(_) => Seq(ElbFilePartition(f)) // forward-walk fallback
+          case Left(_) => Seq(FileRecordPartition(f)) // forward-walk fallback
           case Right(_) =>
             flush()
             groups.toSeq
@@ -273,10 +193,15 @@ class TextArchiveScan(paths: Seq[String], required: StructType,
         scala.concurrent.duration.Duration.Inf).flatten.toArray
     } finally pool.shutdown()
   }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TextArchiveReaderFactory(required.fieldNames, pushed, maxPayload, conf)
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new TextArchiveMicroBatchStream(paths, required, pushed, maxPayload, conf)
+
+  /** Lowercased extension of the member BASENAME (null when none). */
+  def extOf(path: String): String = {
+    if (path == null) return null
+    val base = path.substring(path.lastIndexOf('/') + 1)
+    val dot = base.lastIndexOf('.')
+    if (dot <= 0 || dot == base.length - 1) null
+    else base.substring(dot + 1).toLowerCase
+  }
 }
 
 /** CD-planned member range of one zip: the local-header offsets this
@@ -285,42 +210,6 @@ class TextArchiveScan(paths: Seq[String], required: StructType,
   */
 case class ZipMemberRangePartition(path: String, locOffsets: Array[Long])
     extends InputPartition
-
-/** File-count offsets over the sorted listing — the [[ElbMicroBatchStream]]
-  * recipe; corpus drop folders are append-only with versioned names.
-  */
-class TextArchiveMicroBatchStream(paths: Seq[String], required: StructType,
-    pushed: Array[Filter], maxPayload: Long,
-    conf: SerializableHadoopConf) extends MicroBatchStream {
-  private def listing(): Seq[String] = ElbDataSource.expand(paths, conf.value)
-  override def initialOffset(): Offset = ElbFileOffset(0)
-  override def latestOffset(): Offset = ElbFileOffset(listing().size)
-  override def deserializeOffset(json: String): Offset =
-    ElbFileOffset(json.trim.toInt)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[ElbFileOffset].n
-    val e = end.asInstanceOf[ElbFileOffset].n
-    listing().slice(s, e).map(ElbFilePartition(_): InputPartition).toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TextArchiveReaderFactory(required.fieldNames, pushed, maxPayload, conf)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-class TextArchiveReaderFactory(fieldNames: Array[String], pushed: Array[Filter],
-    maxPayload: Long, conf: SerializableHadoopConf) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case ZipMemberRangePartition(path, offsets) =>
-        new ZipMembersPartitionReader(path, offsets, fieldNames, pushed,
-          maxPayload, conf)
-      case p: ElbFilePartition =>
-        new TextArchivePartitionReader(p.path, fieldNames, pushed,
-          maxPayload, conf)
-      case p => throw new IllegalStateException(s"unexpected partition $p")
-    }
-}
 
 /** One member row (or quarantine row) of the archive walk. */
 private[sources] case class ArchiveMember(
@@ -659,17 +548,15 @@ private[sources] object ZipEntryReading {
   * payload.
   */
 class TextArchivePartitionReader(pathStr: String, fieldNames: Array[String],
-    pushed: Array[Filter], maxPayload: Long, conf: SerializableHadoopConf)
+    passes: ArchiveMember => Boolean, maxPayload: Long, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   private val pathUtf8 = UTF8String.fromString(pathStr)
   private val wantText = fieldNames.contains("text")
 
-  private val passes = TextArchiveDataSource.compilePredicates(pushed)
-
   private lazy val walker: ArchiveWalker = {
     val hp = new org.apache.hadoop.fs.Path(pathStr)
-    val fs = hp.getFileSystem(conf.value)
+    val fs = hp.getFileSystem(conf)
     val raw = fs.open(hp)
     val lower = pathStr.toLowerCase
     if (lower.endsWith(".zip"))
@@ -713,17 +600,16 @@ class TextArchivePartitionReader(pathStr: String, fieldNames: Array[String],
   *    drain to stay positioned).
   */
 class ZipMembersPartitionReader(pathStr: String, locOffsets: Array[Long],
-    fieldNames: Array[String], pushed: Array[Filter], maxPayload: Long,
-    conf: SerializableHadoopConf) extends PartitionReader[InternalRow] {
+    fieldNames: Array[String], passes: ArchiveMember => Boolean, maxPayload: Long,
+    conf: Configuration) extends PartitionReader[InternalRow] {
 
   private val pathUtf8 = UTF8String.fromString(pathStr)
   private val wantText = fieldNames.contains("text")
-  private val passes = TextArchiveDataSource.compilePredicates(pushed)
 
   private var fsInOpened = false
   private lazy val fsIn = {
     val hp = new org.apache.hadoop.fs.Path(pathStr)
-    val in = hp.getFileSystem(conf.value).open(hp)
+    val in = hp.getFileSystem(conf).open(hp)
     fsInOpened = true
     in
   }

@@ -4,14 +4,10 @@ import java.io.{BufferedInputStream, ByteArrayOutputStream, EOFException, InputS
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In, IsNotNull, StringContains, StringStartsWith}
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -43,7 +39,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * that itself contains such a line resyncs early, which the
   * separator-tolerant walk absorbs at the next boundary).
   *
-  * Scale shape, same rules as [[ElbDataSource]]:
+  * Scale shape, from the shared [[FileRecordSource]] scaffold:
   *  - **one partition per container file** (gzip members are not
   *    splittable mid-stream; crawl corpora ship as many ~1 GiB
   *    containers, so file count is the parallelism),
@@ -54,24 +50,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `target_uri`, `record_id` equality/prefix/contains/in) drops
   *    records BEFORE their payload is read: `warc_type = 'conversion'`
   *    skips request/metadata/response payload bytes entirely.
-  *  - a `maxPayload` option (default 64 MiB) quarantines rather than
-  *    buffers records whose declared length a scan should not trust.
+  *  - a `maxPayload` option (default 64 MiB, clamped below 2 GiB)
+  *    quarantines rather than buffers records whose declared length a
+  *    scan should not trust.
   */
-class WarcDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "warc"
-  override def supportsExternalMetadata(): Boolean = false
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    WarcDataSource.fullSchema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new WarcTable(ElbDataSource.resolvePaths(properties),
-      Option(properties.get("maxpayload")).map(_.toLong)
-        .getOrElse(WarcDataSource.defaultMaxPayload))
+class WarcDataSource extends FileRecordSource {
+  protected def format: FileRecordFormat[_, _] = WarcDataSource
 }
 
-object WarcDataSource {
+object WarcDataSource extends FileRecordFormat[WarcRecord, Long] {
   val fileColumn = "warc_source_file"
-  val defaultMaxPayload: Long = 64L * 1024 * 1024
+  val shortName = "warc"
 
   val fullSchema: StructType = StructType(Seq(
     StructField("warc_type", StringType),
@@ -86,98 +75,23 @@ object WarcDataSource {
     StructField(fileColumn, StringType, nullable = false)))
 
   /** Header-string columns a predicate may be pushed on. */
-  val filterable: Set[String] =
+  val pushable: Set[String] =
     Set("warc_type", "record_id", "target_uri", "content_type")
-}
 
-class WarcTable(paths: Seq[String], maxPayload: Long)
-    extends Table with SupportsRead {
-  override def name(): String = s"warc(${paths.mkString(",")})"
-  override def schema(): StructType = WarcDataSource.fullSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    // read options resolve here (case-insensitive); the table-level value
-    // is the fallback for paths where options don't reach getTable
-    val mp = Option(options.get("maxpayload")).map(_.toLong).getOrElse(maxPayload)
-    new WarcScanBuilder(paths, mp, new SerializableHadoopConf(conf))
+  /** The clamped `maxpayload` cap. */
+  def parseOptions(options: CaseInsensitiveStringMap): Long =
+    FileRecordSource.maxPayload(options)
+
+  def column(name: String): WarcRecord => String = name match {
+    case "warc_type" => _.warcType
+    case "record_id" => _.recordId
+    case "target_uri" => _.targetUri
+    case "content_type" => _.contentType
   }
-}
 
-class WarcScanBuilder(paths: Seq[String], maxPayload: Long,
-    conf: SerializableHadoopConf)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = WarcDataSource.fullSchema
-  private var pushed: Array[Filter] = Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  /** Same V2 contract as the ELB source: accepted shapes are also
-    * returned for Spark's post-scan re-check; the win is payloads never
-    * read for records a header predicate rejects.
-    */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val ok = WarcDataSource.filterable
-    val (acc, rest) = filters.partition {
-      case EqualTo(a, _: String) => ok.contains(a)
-      case In(a, vs) if vs.forall(_.isInstanceOf[String]) => ok.contains(a)
-      case IsNotNull(a) => ok.contains(a)
-      case StringStartsWith(a, _) => ok.contains(a)
-      case StringContains(a, _) => ok.contains(a)
-      case _ => false
-    }
-    pushed = acc
-    rest ++ acc
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def build(): Scan = new WarcScan(paths, required, pushed, maxPayload, conf)
-}
-
-class WarcScan(paths: Seq[String], required: StructType, pushed: Array[Filter],
-    maxPayload: Long, conf: SerializableHadoopConf) extends Scan with Batch {
-  private lazy val files = ElbDataSource.expand(paths, conf.value)
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"warc scan: ${files.size} files, ${required.fieldNames.mkString(",")}" +
-      (if (pushed.isEmpty) "" else s", PushedFilters: ${pushed.mkString(", ")}")
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map(ElbFilePartition(_): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required.fieldNames, pushed, maxPayload, conf)
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new WarcMicroBatchStream(paths, required, pushed, maxPayload, conf)
-}
-
-/** File-count offsets over the sorted listing — the [[ElbMicroBatchStream]]
-  * recipe; crawl drop folders are append-only with timestamped names, the
-  * same assumption ALB log folders satisfy.
-  */
-class WarcMicroBatchStream(paths: Seq[String], required: StructType,
-    pushed: Array[Filter], maxPayload: Long,
-    conf: SerializableHadoopConf) extends MicroBatchStream {
-  private def listing(): Seq[String] = ElbDataSource.expand(paths, conf.value)
-  override def initialOffset(): Offset = ElbFileOffset(0)
-  override def latestOffset(): Offset = ElbFileOffset(listing().size)
-  override def deserializeOffset(json: String): Offset =
-    ElbFileOffset(json.trim.toInt)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[ElbFileOffset].n
-    val e = end.asInstanceOf[ElbFileOffset].n
-    listing().slice(s, e).map(ElbFilePartition(_): InputPartition).toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required.fieldNames, pushed, maxPayload, conf)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-class WarcReaderFactory(fieldNames: Array[String], pushed: Array[Filter],
-    maxPayload: Long, conf: SerializableHadoopConf) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new WarcPartitionReader(partition.asInstanceOf[ElbFilePartition].path,
-      fieldNames, pushed, maxPayload, conf)
+  def open(path: String, fieldNames: Array[String], passes: WarcRecord => Boolean,
+      maxPayload: Long, conf: Configuration): PartitionReader[InternalRow] =
+    new WarcPartitionReader(path, fieldNames, passes, maxPayload, conf)
 }
 
 /** One parsed record (or quarantine row) of the container walk. */
@@ -351,37 +265,15 @@ private[sources] class WarcRecordIterator(in: InputStream, wantPayload: Boolean,
   * their payload.
   */
 class WarcPartitionReader(pathStr: String, fieldNames: Array[String],
-    pushed: Array[Filter], maxPayload: Long, conf: SerializableHadoopConf)
+    passes: WarcRecord => Boolean, maxPayload: Long, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   private val pathUtf8 = UTF8String.fromString(pathStr)
   private val wantPayload = fieldNames.contains("payload")
 
-  private def field(r: WarcRecord, name: String): Any = name match {
-    case "warc_type" => r.warcType
-    case "record_id" => r.recordId
-    case "target_uri" => r.targetUri
-    case "content_type" => r.contentType
-    case _ => null
-  }
-
-  private val preds: Array[WarcRecord => Boolean] = pushed.map {
-    case EqualTo(a, v: String) => (r: WarcRecord) => field(r, a) == v
-    case In(a, vs) =>
-      val set = vs.map(_.asInstanceOf[String]).toSet
-      (r: WarcRecord) => { val f = field(r, a); f != null && set.contains(f.asInstanceOf[String]) }
-    case IsNotNull(a) => (r: WarcRecord) => field(r, a) != null
-    case StringStartsWith(a, p) => (r: WarcRecord) =>
-      { val f = field(r, a); f != null && f.asInstanceOf[String].startsWith(p) }
-    case StringContains(a, s) => (r: WarcRecord) =>
-      { val f = field(r, a); f != null && f.asInstanceOf[String].contains(s) }
-    case f => throw new IllegalStateException(s"unpushable filter $f")
-  }
-  private def passes(r: WarcRecord): Boolean = preds.forall(_(r))
-
   private lazy val iter: WarcRecordIterator = {
     val hp = new org.apache.hadoop.fs.Path(pathStr)
-    val fs = hp.getFileSystem(conf.value)
+    val fs = hp.getFileSystem(conf)
     val raw = fs.open(hp)
     val in: InputStream =
       if (pathStr.endsWith(".gz")) new GZIPInputStream(raw, 1 << 16) else raw

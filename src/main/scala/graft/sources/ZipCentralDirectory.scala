@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 /** Central-directory parse shared by [[ArchiveAudit.zipFsck]] (the
-  * audit) and [[TextArchiveScan]] (central-directory-driven SPLITTABLE
+  * audit) and [[TextArchiveDataSource.planBatch]] (central-directory-driven SPLITTABLE
   * zip reading — round 15). A zip's authoritative member list lives at
   * the END of the file: one EOCD record (backward-scanned through the
   * ≤ 64 KiB comment window) pointing at ~46+name bytes per member, each
